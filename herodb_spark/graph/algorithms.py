@@ -10,9 +10,17 @@ and whole-stage codegen in the loop, which is the idiomatic PySpark
 path at scale.
 
 Scale notes:
-- Each iteration = one shuffle keyed on src/dst. `localCheckpoint()`
-  every iteration truncates lineage so plan size / replanning stays
-  O(1) in iteration count (the classic iterative-DataFrame trap).
+- Every loop here runs on ONE driver, `session.iterate` (GraphX's
+  shared Pregel loop as a DataFrame program): it owns the round
+  counter, the cap and what happens at it (return the capped state,
+  or raise where an unconverged result would be wrong), the
+  checkpoint cadence (every k rounds plus the last) and the stop when
+  a step reports no change. Each algorithm keeps only its step and
+  its change probe, which rides the checkpoint job
+  (`session.ckpt_count` / `ckpt_observe`).
+- Each iteration = one shuffle keyed on src/dst. The cadence
+  checkpoints truncate lineage so plan size / replanning stays O(1)
+  in iteration count (the classic iterative-DataFrame trap).
 - Frontier-based BFS keeps per-iteration work proportional to the
   frontier, not the graph.
 - Connected components: `connected_components` is min-label
@@ -27,13 +35,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# the shared observe-on-checkpoint probes and the iteration driver
+# live in session.py (public, one definition — r13 ADVICE); the count
+# probe keeps its old name for this module's call sites
+from herodb_spark.session import ckpt_count as _ckpt_count
+from herodb_spark.session import ckpt_observe as _ckpt_observe
+from herodb_spark.session import iterate as _iterate
+
 MAX_ITERS = 30
 
-
-# the shared observe-on-checkpoint probe lives in session.py (public,
-# one definition — r13 ADVICE); kept under the old name for this
-# module's call sites
-from herodb_spark.session import ckpt_count as _ckpt_count  # noqa: E402
+#: PageRank checkpoint cadence (rounds per eager checkpoint): swept at
+#: sf0.1 median-of-5 in round 5 (BASELINE.md) — each blocking job
+#: costs a full scheduler round-trip, and at 10 iterations cadence 3
+#: spent more on the extra jobs than the longer lazy segments cost
+RANK_CHECKPOINT_EVERY = 5
 
 
 def closure(step, init: DataFrame, key: list[str], max_iters: int = MAX_ITERS,
@@ -75,36 +90,31 @@ def closure(step, init: DataFrame, key: list[str], max_iters: int = MAX_ITERS,
     every delta inherits the init's partitioning, and a 1-row
     recurrence spread over 8 partitions turns the final union into
     hundreds of empty tasks."""
-    state = init.localCheckpoint(eager=True)
-    frontier = state
-    for i in range(1, max_iters + 1):
+    def round_(sf, ckpt):
+        state, frontier = sf
         new = step(frontier)
         if dedup_new:
             new = new.dropDuplicates(key)
         if subtract_state:
             new = new.join(state.select(*key), key, "left_anti")
-            # the emptiness probe rides the checkpoint job (r13 opt:
-            # no separate isEmpty job per iteration)
+        n_new = None
+        if ckpt:
+            # checkpoint the delta BEFORE unioning it into the state:
+            # the state then references the materialized segment
+            # instead of holding a lazy twin of the plan the probe
+            # already computed (which would re-run every segment once
+            # more at final evaluation); the emptiness probe rides the
+            # checkpoint job (r13 opt: no separate isEmpty job)
             new, n_new = _ckpt_count(new)
+        if subtract_state:
             if n_new == 0:
-                break
-            state = state.unionByName(new).localCheckpoint(eager=True)
-            frontier = new
-        else:
-            probe = probe_every is not None and (i % probe_every == 0 or i == max_iters)
-            if probe:
-                # checkpoint the delta BEFORE unioning it into the
-                # state: the state then references the materialized
-                # segment instead of holding a lazy twin of the plan
-                # the probe already computed (which would re-run every
-                # segment once more at final evaluation); the
-                # emptiness probe rides the checkpoint job (r13 opt)
-                new, n_new = _ckpt_count(new)
-            state = state.unionByName(new)
-            frontier = new
-            if probe and n_new == 0:
-                break
-    return state
+                return sf, False
+            return (state.unionByName(new).localCheckpoint(eager=True), new), True
+        return (state.unionByName(new), new), n_new != 0
+
+    state = init.localCheckpoint(eager=True)
+    every = 1 if subtract_state else probe_every
+    return _iterate(round_, (state, state), max_iters, every)[0]
 
 
 def fixpoint(step, init: DataFrame, max_iters: int = MAX_ITERS,
@@ -130,18 +140,17 @@ def fixpoint(step, init: DataFrame, max_iters: int = MAX_ITERS,
     |A| = |B|, A∖B = ∅ implies B∖A = ∅ (|A∖B| = |A| − |A∩B|). The old
     shape paid two exceptAll probes every round."""
     if not probe_change:
-        state = init.localCheckpoint(eager=True)
-        for _ in range(max_iters):
-            state = step(state).localCheckpoint(eager=True)
-        return state
-    state, n_state = _ckpt_count(init)
-    for _ in range(max_iters):
+        def fixed_round(state, _ckpt):
+            return step(state).localCheckpoint(eager=True), True
+
+        return _iterate(fixed_round, init.localCheckpoint(eager=True), max_iters)
+
+    def probed_round(sn, _ckpt):
+        state, n_state = sn
         new, n_new = _ckpt_count(step(state))
-        changed = n_new != n_state or not new.exceptAll(state).isEmpty()
-        state, n_state = new, n_new
-        if not changed:
-            break
-    return state
+        return (new, n_new), n_new != n_state or not new.exceptAll(state).isEmpty()
+
+    return _iterate(probed_round, _ckpt_count(init), max_iters)[0]
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -219,46 +228,36 @@ def connected_components(undirected: DataFrame, max_iters: int = MAX_ITERS) -> D
     observed DECIMAL(38,0) sum (overflow-proof for any long ids),
     replacing the per-round change-join probe job."""
 
-    def _ckpt_sum(df: DataFrame) -> tuple[DataFrame, object]:
-        from pyspark.sql import Observation
+    comp_sum = F.sum(F.col("comp").cast("decimal(38,0)"))
 
-        obs = Observation()
-        out = df.observe(
-            obs, F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
-        ).localCheckpoint(eager=True)
-        return out, obs.get["s"]
-
-    labels, prev_sum = _ckpt_sum(
-        undirected.select(F.col("src").alias("node"))
-        .unionByName(undirected.select(F.col("dst").alias("node")))
-        .distinct()
-        .withColumn("comp", F.col("node"))
-    )
-    converged = False
-    for _ in range(max_iters):
+    def round_(ls, _ckpt):
+        labels, prev_sum = ls
         neighbor_min = (
             undirected.join(labels, undirected.dst == labels.node)
             .groupBy(F.col("src").alias("node"))
             .agg(F.min("comp").alias("n_comp"))
         )
-        new_labels, new_sum = _ckpt_sum(
+        new_labels, new_sum = _ckpt_observe(
             labels.join(neighbor_min, "node", "left")
-            .select("node", F.least(F.col("comp"), F.coalesce("n_comp", F.col("comp"))).alias("comp"))
+            .select("node", F.least(F.col("comp"), F.coalesce("n_comp", F.col("comp"))).alias("comp")),
+            comp_sum,
         )
-        labels, changed = new_labels, new_sum != prev_sum
-        prev_sum = new_sum
-        if not changed:
-            converged = True
-            break
-    if not converged:
-        # silently returning a half-propagated labeling would hand
-        # multiple comp ids to one true component — fail loudly
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            "(graph diameter exceeds max_iters; raise it or use "
-            "connected_components_twophase)"
-        )
-    return labels
+        return (new_labels, new_sum), new_sum != prev_sum
+
+    init = _ckpt_observe(
+        undirected.select(F.col("src").alias("node"))
+        .unionByName(undirected.select(F.col("dst").alias("node")))
+        .distinct()
+        .withColumn("comp", F.col("node")),
+        comp_sum,
+    )
+    # silently returning a half-propagated labeling would hand
+    # multiple comp ids to one true component — fail loudly
+    return _iterate(round_, init, max_iters, cap_error=(
+        f"connected_components did not converge in {max_iters} rounds "
+        "(graph diameter exceeds max_iters; raise it or use "
+        "connected_components_twophase)"
+    ))[0]
 
 
 def connected_components_twophase(undirected: DataFrame, max_iters: int = MAX_ITERS) -> DataFrame:
@@ -307,8 +306,8 @@ def connected_components_twophase(undirected: DataFrame, max_iters: int = MAX_IT
             F.least(F.min("dst"), F.first("src")).alias("m")
         )
 
-    done = False
-    for _ in range(max_iters):
+    def round_(en, _ckpt):
+        edges, n_edges = en
         # large-star: from the full symmetric view, point every
         # strictly larger neighbor at u's minimum. Kept as an eager
         # checkpoint: the small-star step references ls TWICE via the
@@ -342,33 +341,63 @@ def connected_components_twophase(undirected: DataFrame, max_iters: int = MAX_IT
             .where(F.col("src") != F.col("dst"))
             .distinct()
         )
-        converged = n_ss == n_edges and ss.exceptAll(edges).isEmpty()
-        edges, n_edges = ss, n_ss
-        if converged:
-            done = True
-            break
-    if not done:
-        # the final read-off assumes a star fixpoint; a premature exit
-        # would fan out the left join into duplicate (node, comp) rows
-        raise RuntimeError(
-            f"connected_components_twophase did not converge in {max_iters} "
-            "rounds (O(log n) expected — this indicates a bug or an "
-            "adversarial graph; raise max_iters)"
-        )
+        return (ss, n_ss), not (n_ss == n_edges and ss.exceptAll(edges).isEmpty())
+
+    # the final read-off assumes a star fixpoint; a premature exit
+    # would fan out the left join into duplicate (node, comp) rows
+    edges, _ = _iterate(round_, (edges, n_edges), max_iters, cap_error=(
+        f"connected_components_twophase did not converge in {max_iters} "
+        "rounds (O(log n) expected — this indicates a bug or an "
+        "adversarial graph; raise max_iters)"
+    ))
     # at the star fixpoint each child points directly at its root
     return orig_nodes.join(
         edges.select(F.col("src").alias("node"), F.col("dst").alias("root")), "node", "left"
     ).select("node", F.coalesce("root", F.col("node")).alias("comp"))
 
 
-def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 10, damping: float = 0.85,
-             checkpoint_every: int = 5) -> DataFrame:
+def _rank_loop(base: DataFrame, ranks: DataFrame, out_deg: DataFrame, edges: DataFrame,
+               iters: int, has_dangling: bool, rank_expr) -> DataFrame:
+    """The iteration shared by `pagerank` and `personalized_pagerank`:
+    per round, contributions rank/deg along out-edges summed per
+    destination, then ``base ⟕ contribs`` (× the 1-row dangling mass
+    when the graph has dangling nodes) projected through
+    ``rank_expr(incoming, dang)`` — `dang` is None without dangling
+    nodes. The update expressions live in the callers because the
+    DuckDB oracles mirror each one bit for bit. Fixed rounds,
+    checkpointed every RANK_CHECKPOINT_EVERY rounds and on the last
+    (no observation: nothing is probed)."""
+
+    def round_(ranks, ckpt):
+        with_deg = ranks.join(out_deg, "node", "left")
+        contribs = (
+            with_deg.where(F.col("deg").isNotNull())
+            .join(edges, F.col("node") == edges.src)
+            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
+            .groupBy("node")
+            .agg(F.sum("c").alias("c"))
+        )
+        incoming = F.coalesce(F.col("c"), F.lit(0.0))
+        nxt = base.join(contribs, "node", "left")
+        dang = None
+        if has_dangling:
+            # dangling mass as a broadcast 1-row DataFrame crossJoined
+            # into the update — the whole iteration stays lazy (no
+            # per-iteration driver round-trip; round-1 weak spot #5)
+            nxt = nxt.crossJoin(F.broadcast(with_deg.where(F.col("deg").isNull()).agg(
+                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
+            )))
+            dang = F.col("_dang")
+        nxt = nxt.select("node", rank_expr(incoming, dang).alias("rank"))
+        return (nxt.localCheckpoint(eager=True) if ckpt else nxt), True
+
+    return _iterate(round_, ranks, iters, RANK_CHECKPOINT_EVERY)
+
+
+def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 10, damping: float = 0.85) -> DataFrame:
     """Uniform-transition PageRank with dangling-mass redistribution.
     `nodes`: single column `node`; `edges`: src,dst (unweighted).
-    `checkpoint_every` sets the localCheckpoint cadence (see the
-    comment at the loop tail; sweep results in BASELINE.md)."""
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
+    Update: rank' = (1−d)/n + d·(Σ_in rank/deg + dang/n)."""
     out_deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
         eager=True
     )
@@ -382,51 +411,15 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = 10, damping: float
         F.sum(F.when(F.col("deg").isNull(), 1).otherwise(0)).alias("n_dang"),
     ).first()
     n = setup["n"]
-    has_dangling = bool(setup["n_dang"])
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
-    for i in range(iters):
-        with_deg = ranks.join(out_deg, "node", "left")
-        contribs = (
-            with_deg.where(F.col("deg").isNotNull())
-            .join(edges, F.col("node") == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        incoming = F.coalesce(F.col("c"), F.lit(0.0))
-        if has_dangling:
-            # dangling mass as a broadcast 1-row DataFrame crossJoined
-            # into the update — the whole iteration stays lazy (no
-            # per-iteration driver round-trip; round-1 weak spot #5)
-            dang = with_deg.where(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-            )
-            ranks = (
-                nodes.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    (
-                        F.lit(base)
-                        + F.lit(damping) * (incoming + F.col("_dang") / F.lit(float(n)))
-                    ).alias("rank"),
-                )
-            )
-        else:
-            ranks = nodes.join(contribs, "node", "left").select(
-                "node",
-                (F.lit(base) + F.lit(damping) * incoming).alias("rank"),
-            )
-        # checkpoint every `checkpoint_every` iterations: enough to
-        # keep the plan bounded without one materialization job per
-        # iteration (each blocking job costs a full scheduler
-        # round-trip; at 10 iterations the cadence-3 version spent
-        # more wall-clock on the extra jobs than the longer lazy
-        # segments cost). Cadence swept at sf0.1 median-of-5 in
-        # round 5 — see BASELINE.md.
-        if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    def rank_expr(incoming, dang):
+        if dang is None:
+            return F.lit(base) + F.lit(damping) * incoming
+        return F.lit(base) + F.lit(damping) * (incoming + dang / F.lit(float(n)))
+
+    ranks = _rank_loop(nodes, nodes.withColumn("rank", F.lit(1.0 / n)), out_deg, edges,
+                       iters, bool(setup["n_dang"]), rank_expr)
     return ranks.select("node", F.round("rank", 6).alias("rank"))
 
 
@@ -446,23 +439,20 @@ def personalized_pagerank(
     seeds: list[int],
     iters: int = 10,
     damping: float = 0.85,
-    checkpoint_every: int = 5,
 ) -> DataFrame:
     """PERSONALIZED PageRank: the teleport distribution concentrates
     on `seeds` (uniform over them) instead of all nodes — the random
     walker restarts at the seed set, so scores measure proximity TO
     THE SEEDS (the recsys/similar-items staple; plain `pagerank` is
     the pref≡1/n special case). Dangling mass also teleports to the
-    seed distribution. Same iteration scaffolding as `pagerank`
-    (static dangling decision, broadcast 1-row dangling mass, cadence
+    seed distribution. Same iteration as `pagerank` (`_rank_loop`:
+    static dangling decision, broadcast 1-row dangling mass, cadence
     checkpoints); update:
 
         rank' = (1−d)·pref + d·(Σ_in rank/deg + dang·pref)
 
     Unreachable non-seeds converge to exactly 0.0 (pref 0, no
     incoming), so the nonzero support is the seed-reachable set."""
-    if checkpoint_every < 1:
-        raise ValueError(f"checkpoint_every must be >= 1, got {checkpoint_every}")
     if not seeds:
         raise ValueError("personalized_pagerank needs at least one seed")
     pref = F.when(
@@ -475,40 +465,13 @@ def personalized_pagerank(
         .localCheckpoint(eager=True)
     )
     has_dangling = not nodes.join(out_deg, "node", "left_anti").isEmpty()
-    ranks = nodes_pref.select("node", F.col("pref").alias("rank"))
     one_minus_d = 1.0 - damping
-    for i in range(iters):
-        with_deg = ranks.join(out_deg, "node", "left")
-        contribs = (
-            with_deg.where(F.col("deg").isNotNull())
-            .join(edges, F.col("node") == edges.src)
-            .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
-            .groupBy("node")
-            .agg(F.sum("c").alias("c"))
-        )
-        incoming = F.coalesce(F.col("c"), F.lit(0.0))
-        if has_dangling:
-            dang = with_deg.where(F.col("deg").isNull()).agg(
-                F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dang")
-            )
-            ranks = (
-                nodes_pref.join(contribs, "node", "left")
-                .crossJoin(F.broadcast(dang))
-                .select(
-                    "node",
-                    (
-                        F.lit(one_minus_d) * F.col("pref")
-                        + F.lit(damping) * (incoming + F.col("_dang") * F.col("pref"))
-                    ).alias("rank"),
-                )
-            )
-        else:
-            ranks = nodes_pref.join(contribs, "node", "left").select(
-                "node",
-                (F.lit(one_minus_d) * F.col("pref") + F.lit(damping) * incoming).alias(
-                    "rank"
-                ),
-            )
-        if i % checkpoint_every == checkpoint_every - 1 or i == iters - 1:
-            ranks = ranks.localCheckpoint(eager=True)
+
+    def rank_expr(incoming, dang):
+        if dang is None:
+            return F.lit(one_minus_d) * F.col("pref") + F.lit(damping) * incoming
+        return F.lit(one_minus_d) * F.col("pref") + F.lit(damping) * (incoming + dang * F.col("pref"))
+
+    ranks = _rank_loop(nodes_pref, nodes_pref.select("node", F.col("pref").alias("rank")),
+                       out_deg, edges, iters, has_dangling, rank_expr)
     return ranks.select("node", F.round("rank", 6).alias("ppr"))

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from herodb_spark.graph import algorithms as GA
 from herodb_spark.graph import edges as GE
 from herodb_spark.session import ckpt_count
+from herodb_spark.session import iterate as _iterate
 
 KCORE_K = 3
 MAX_ITERS = 30
@@ -67,19 +68,21 @@ ORDER BY a, b
 def graph_kcore(spark: SparkSession, sf_dir: str, edges=None) -> DataFrame:
     """k-core (k=3) of the sparse undirected trade graph: nodes with
     core degree ≥ 3 after iterative peeling."""
-    und = GE.undirected_sparse_edges(spark, sf_dir, edges).localCheckpoint(eager=True)
-    edges = und
-    for _ in range(MAX_ITERS):
+
+    def peel(edges, _ckpt):
         deg = edges.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
         # emptiness probe rides the checkpoint job (r13 opt)
         weak, n_weak = ckpt_count(deg.where(F.col("deg") < KCORE_K).select("node"))
         if n_weak == 0:
-            break
-        edges = (
+            return edges, False
+        return (
             edges.join(weak.select(F.col("node").alias("src")), "src", "left_anti")
             .join(weak.select(F.col("node").alias("dst")), "dst", "left_anti")
             .localCheckpoint(eager=True)
-        )
+        ), True
+
+    und = GE.undirected_sparse_edges(spark, sf_dir, edges).localCheckpoint(eager=True)
+    edges = _iterate(peel, und, MAX_ITERS)
     return (
         edges.groupBy(F.col("src").alias("node"))
         .agg(F.count(F.lit(1)).alias("core_degree"))
@@ -280,9 +283,9 @@ def label_propagation(und: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=True)
     )
-    labels = nodes.select("node", F.col("node").alias("lbl"))
     w = Window.partitionBy("node").orderBy(F.desc("n"), F.asc("lbl"))
-    for r in range(rounds):
+
+    def round_(labels, ckpt):
         nb = und.join(
             labels.withColumnRenamed("node", "dst"), "dst"
         ).select(F.col("src").alias("node"), "lbl")
@@ -297,8 +300,9 @@ def label_propagation(und: DataFrame, rounds: int = LPA_ROUNDS) -> DataFrame:
             labels.join(best, "node", "left")
             .select("node", F.coalesce("new_lbl", "lbl").alias("lbl"))
         )
-        if r % 4 == 3 or r == rounds - 1:
-            labels = labels.localCheckpoint(eager=True)
+        return (labels.localCheckpoint(eager=True) if ckpt else labels), True
+
+    labels = _iterate(round_, nodes.select("node", F.col("node").alias("lbl")), rounds, every=4)
     return labels.select("node", F.col("lbl").alias("community"))
 
 

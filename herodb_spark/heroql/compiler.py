@@ -44,7 +44,12 @@ adds projections only. Recursive SCCs evaluate SEMI-NAIVELY
 (_eval_seminaive_scc): per-round join work scales with the frontier,
 not the accumulated state — the same shape as the dedicated
 closure()/fixpoint() operators in graph/algorithms.py, generalized
-to arbitrary Datalog SCCs. Mutations rewrite the table DataFrame
+to arbitrary Datalog SCCs, and run on the same one iteration driver
+(session.iterate): it owns the round counter, the `max_iters` cap
+(capped state returned) and the stop once no table gains a fact;
+the SCC's round step keeps only its derivations and its per-table
+emptiness probes, which ride the checkpoint jobs (session.ckpt_count).
+Mutations rewrite the table DataFrame
 lazily and localCheckpoint every few statements so statement loops
 don't accumulate unbounded lineage.
 """
@@ -58,7 +63,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from herodb_spark.heroql import parser as P
-from herodb_spark.session import literal_df
+from herodb_spark.session import iterate, literal_df
 
 
 class HeroQLError(Exception):
@@ -1472,8 +1477,9 @@ class HeroQL:
             state[n] = (
                 None if seed is None else seed.distinct().localCheckpoint(eager=True)
             )
-        delta = dict(state)
-        for _ in range(self.max_iters):
+
+        def round_(sd, _ckpt):
+            state, delta = sd
             new_delta: dict[str, DataFrame | None] = {}
             for n in scc_names:
                 d = self._def(n)
@@ -1508,7 +1514,7 @@ class HeroQL:
                 new, n_new = ckpt_count(new)
                 new_delta[n] = None if n_new == 0 else new
             if not any(dd is not None for dd in new_delta.values()):
-                break
+                return sd, False
             # round barrier: merge every table's delta only after all
             # derivations ran, so each round observes the previous
             # round's state (the inflationary fixpoint is the same
@@ -1524,8 +1530,9 @@ class HeroQL:
                     if state[n] is None
                     else state[n].unionByName(dd).localCheckpoint(eager=True)
                 )
-            delta = new_delta
-        return state
+            return (state, new_delta), True
+
+        return iterate(round_, (state, dict(state)), self.max_iters)[0]
 
     def _eval_idb(self, name: str) -> None:
         scc = self._scc_of(name)

@@ -232,10 +232,16 @@ def _band_cand_pairs(sh: DataFrame, pair_cond) -> DataFrame:
     explodes, so the signature subtree is referenced once, the self-
     join's two Exchanges collapse into the groupBy's one, and no eager
     checkpoint job runs. In-bucket pair volume is identical to the
-    join's (same bucket ⇒ same cross product); buckets stay small at
-    any scale because band-key cardinality grows with the corpus (the
-    singleton-bucket filter drops the vast majority before any pair is
-    generated)."""
+    join's (same bucket ⇒ same cross product).
+
+    Bucket size is NOT bounded by corpus growth: band-key cardinality
+    grows with the corpus, so buckets of unrelated documents stay
+    small (the singleton-bucket filter drops most before any pair is
+    generated), but a cluster of k near-identical documents shares
+    every band key, so each of its 32 buckets holds all k. Such a
+    bucket is ONE collect_list row whose k² pairs explode in ONE task
+    — where the replaced self-join spread them over shuffle tasks.
+    Duplicate-heavy corpora therefore skew this head; it is uncapped."""
     exploded = sh.select("doc_id", F.explode("sh").alias("s"))
     sig = exploded.groupBy("doc_id").agg(*H.minhash_aggs(F.col("s"), 64))
     bands = sig.select(

@@ -10,6 +10,7 @@ pinned to UTC so timestamp semantics are deployment-independent.
 from __future__ import annotations
 
 import calendar
+import contextlib
 import datetime
 import math
 import os
@@ -170,12 +171,100 @@ def ckpt_count(df: "DataFrame") -> tuple["DataFrame", int]:
     enabled. Shared by graph.algorithms, graph.extra_algos and
     heroql.compiler (r13 ADVICE: one public definition, no cross-layer
     private import)."""
-    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
+    out, n = ckpt_observe(df, F.count(F.lit(1)))
+    return out, int(n)
+
+
+def ckpt_observe(df: "DataFrame", agg: "Column") -> tuple["DataFrame", object]:
+    """localCheckpoint(eager=True) with one aggregate `agg` OBSERVED on
+    the materialization job — the mechanism under `ckpt_count`, open
+    to probes other than a row count (connected_components' Σcomp).
+    Same speculation caveat as `ckpt_count`."""
+    from pyspark.sql import Observation
+
     obs = Observation()
-    out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
-    return out, int(obs.get["n"])
+    out = df.observe(obs, agg.alias("v")).localCheckpoint(eager=True)
+    return out, obs.get["v"]
+
+
+def iterate(step, state, max_rounds: int, every: int | None = 1,
+            cap_error: str | None = None):
+    """The one iteration driver under every checkpointed loop of the
+    engine (recursive rules, graph traversal, ranking, peeling) — the
+    DataFrame analog of GraphX's single shared Pregel loop (Gonzalez
+    et al., OSDI 2014).
+
+    Runs ``state, changed = step(state, ckpt)`` for rounds 1..max_rounds.
+    The driver owns:
+    - the round counter and the cap `max_rounds`;
+    - the checkpoint cadence: `ckpt` is True on rounds every, 2·every,
+      … and on the last round (`every=None`: never — one fully-lazy
+      plan, for loops whose round count is statically known);
+    - the stop: the loop ends after the first round whose step
+      reports ``changed=False``;
+    - the cap policy: at the cap the last state is returned, or, when
+      `cap_error` is given, RuntimeError(cap_error) is raised (loops
+      whose result is wrong unless converged).
+
+    The step owns what it checkpoints on a `ckpt` round and its own
+    change probe; count probes ride the checkpoint job through
+    `ckpt_count` / `ckpt_observe`, so a probe costs no extra job.
+    Fixed-round steps always report a change."""
+    if every is not None and every < 1:
+        raise ValueError(f"checkpoint cadence must be >= 1, got {every}")
+    for i in range(1, max_rounds + 1):
+        ckpt = every is not None and (i % every == 0 or i == max_rounds)
+        state, changed = step(state, ckpt)
+        if not changed:
+            return state
+    if cap_error is not None:
+        raise RuntimeError(cap_error)
+    return state
+
+
+@contextlib.contextmanager
+def shuffle8_no_aqe_no_broadcast(spark: SparkSession):
+    """Scope for fixtures that run many EAGER jobs over tiny frames
+    (25-row nation graphs, lifecycle schedules, stream legs): pins
+    8 shuffle partitions, disables AQE and disables auto-broadcast on
+    the session, restoring all three on exit (also when the body
+    raises). Frames returned lazily from the scope re-plan at the
+    caller's settings.
+
+    - 8 shuffle partitions: at the session's one-partition-per-core
+      each tiny exchange pays several times the task-scheduling cost
+      for no parallelism benefit; stateful streaming also sizes its
+      state-store count from this at query start.
+    - AQE off: AQE materializes every join's shuffle stages as
+      separate jobs — 3-4 scheduler round-trips per tiny join instead
+      of 1, for static plans whose estimates already pick the right
+      strategy.
+    - auto-broadcast off: sized LocalRelation literals flip tiny joins
+      to BroadcastHashJoin, and each BroadcastExchange is its own
+      driver job; at fixture size the one-job shuffle join is cheaper
+      (snapshot_lifecycle 41→27 jobs at identical results).
+
+    The pinned partition count also fixes the summation order of the
+    hash-gated PageRank sums: a double SUM is order-dependent, so the
+    rank bits the oracle gate checks depend on this plan.
+
+    The conf is the shared session's: callers overlapping in other
+    threads see it for the scope's duration."""
+    keys = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": "-1",
+    }
+    prev = {k: spark.conf.get(k) for k in keys}
+    try:
+        for k, v in keys.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def get_spark(app_name: str = "herodb_spark", shuffle_partitions: int | None = None) -> SparkSession:

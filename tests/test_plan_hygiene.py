@@ -14,6 +14,11 @@
    broadcast for the small sides at runtime — we just stop
    hard-coding the decision.
 
+4. No module under herodb_spark/ except session.py sets the three
+   tiny-plan confs (shuffle partitions, AQE, auto-broadcast) on the
+   shared session: every such scope goes through
+   session.shuffle8_no_aqe_no_broadcast, which restores them.
+
 This is the "UDFs are the slow path" contract enforced as a test.
 """
 
@@ -21,6 +26,7 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import re
 
 import pytest
 
@@ -147,3 +153,28 @@ def test_balance_partitions_identity_when_well_partitioned(spark, sf_dir):
     small = load_table(spark, sf_dir, "embeddings").coalesce(1)
     spread = S._balance_partitions(small)
     assert spread is not small and spread.rdd.getNumPartitions() == p
+
+
+_TINY_PLAN_CONF_SET = re.compile(
+    r"conf\.set\(\s*[\"']spark\.sql\."
+    r"(shuffle\.partitions|adaptive\.enabled|autoBroadcastJoinThreshold)[\"']"
+)
+
+
+def test_tiny_plan_confs_set_only_in_session_scope():
+    """One conf scope: a hand-rolled save/set/restore of these keys
+    elsewhere is a copy of session.shuffle8_no_aqe_no_broadcast (and,
+    without its finally, a leak into every later query)."""
+    pkg = os.path.join(HERE, "herodb_spark")
+    offenders = []
+    for root, _, files in os.walk(pkg):
+        for fn in files:
+            path = os.path.join(root, fn)
+            if not fn.endswith(".py") or os.path.relpath(path, pkg) == "session.py":
+                continue
+            with open(path) as f:
+                src = f.read()
+            for m in _TINY_PLAN_CONF_SET.finditer(src):
+                line = src.count("\n", 0, m.start()) + 1
+                offenders.append(f"{os.path.relpath(path, HERE)}:{line}: {m.group(1)}")
+    assert not offenders, "tiny-plan confs set outside session.py:\n" + "\n".join(offenders)
